@@ -17,6 +17,7 @@ jobs scheduled FIFO — same model as the reference's CherryPy front end.
 from __future__ import annotations
 
 import json
+import math
 import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -26,6 +27,9 @@ from .serving import RecommendationService
 _TOP = re.compile(r"^/(\d+)/ratings/top/(\d+)$")
 _ONE = re.compile(r"^/(\d+)/ratings/(\d+)$")
 _POST = re.compile(r"^/(\d+)/ratings$")
+# ids are int32 end to end (MLlib ALS and the ratings schema): a wider id
+# answered 200 would be recorded, then break save() and retrain()
+_INT32 = range(-(2**31), 2**31)
 
 
 def _make_handler(service: RecommendationService):
@@ -48,17 +52,18 @@ def _make_handler(service: RecommendationService):
             # dead connection.
             try:
                 code, payload = 404, {"error": f"no route for GET {self.path}"}
-                m = _TOP.match(self.path)
-                if m:
+                top, one = _TOP.match(self.path), _ONE.match(self.path)
+                m = top or one
+                if m and not all(int(g) in _INT32 for g in m.groups()):
+                    code, payload = 400, {"error": "ids and counts must fit int32"}
+                elif top:
                     user_id, count = int(m.group(1)), int(m.group(2))
                     code, payload = 200, service.top_ratings(user_id, count)
-                else:
-                    m = _ONE.match(self.path)
-                    if m:
-                        user_id, item_id = int(m.group(1)), int(m.group(2))
-                        code, payload = 200, service.ratings_for_items(
-                            user_id, [item_id]
-                        )
+                elif one:
+                    user_id, item_id = int(m.group(1)), int(m.group(2))
+                    code, payload = 200, service.ratings_for_items(
+                        user_id, [item_id]
+                    )
             except Exception as e:  # noqa: BLE001 — wire boundary
                 code, payload = 500, {"error": f"{type(e).__name__}: {e}"[:500]}
             self._send(code, payload)
@@ -83,8 +88,15 @@ def _make_handler(service: RecommendationService):
                     )
                     return
                 rows = [(user_id, int(i), float(s)) for i, s in pairs]
-            except (ValueError, TypeError, json.JSONDecodeError) as e:
+            except (ValueError, TypeError, OverflowError) as e:
                 self._send(400, {"error": f"bad body: {e}"})
+                return
+            # json.loads accepts NaN, Infinity and 1e999: one such strength
+            # would poison every later fold-in of this user
+            if user_id not in _INT32 or not all(
+                i in _INT32 and math.isfinite(s) for _, i, s in rows
+            ):
+                self._send(400, {"error": "ids must fit int32, strengths finite"})
                 return
             try:
                 accepted = service.add_ratings(rows)

@@ -370,6 +370,39 @@ def rec_add_ratings(spark, sf_dir):
     )
 
 
+def item_gram(model):
+    """YtY of ``model``'s frozen item factors as a rank x rank float64
+    matrix: partial Grams per partition via mapInPandas, summed on the
+    driver (rank² doubles per partition)."""
+    import numpy as np
+    import pandas as pd
+
+    k = model.rank
+
+    def gram_parts(batches):
+        for pdf in batches:
+            if len(pdf):
+                Y = np.stack(pdf["features"].to_numpy()).astype("float64")
+                yield pd.DataFrame({"g": [(Y.T @ Y).ravel().tolist()]})
+
+    parts = model.itemFactors.mapInPandas(gram_parts, "g array<double>").collect()
+    return np.sum([np.array(r.g) for r in parts], axis=0).reshape(k, k)
+
+
+def foldin_solve(yty, Y, r):
+    """One user's fold-in factor: the implicit-ALS normal equations with
+    the Gram trick, over that user's item factors ``Y`` (n_u x rank) and
+    strengths ``r`` (n_u)."""
+    import numpy as np
+
+    k = yty.shape[0]
+    alpha, lam = 1.0, _ALS_PARAMS["regParam"]
+    n_u = len(r)
+    A = yty + (Y.T * (alpha * r)) @ Y + lam * n_u * np.eye(k)
+    b = Y.T @ (1.0 + alpha * r)
+    return np.linalg.solve(A, b)
+
+
 def foldin_factors(spark, ratings, model, user_pred):
     """Solve fold-in factors for the users selected by ``user_pred`` against
     the frozen item factors of ``model`` (implicit-ALS normal equations with
@@ -378,32 +411,17 @@ def foldin_factors(spark, ratings, model, user_pred):
     import numpy as np
     import pandas as pd
 
-    k = model.rank
-    alpha, lam = 1.0, _ALS_PARAMS["regParam"]
-    itf = model.itemFactors  # id:int, features:array<float>
-
-    def gram_parts(batches):
-        for pdf in batches:
-            if len(pdf):
-                Y = np.stack(pdf["features"].to_numpy()).astype("float64")
-                yield pd.DataFrame({"g": [(Y.T @ Y).ravel().tolist()]})
-
-    parts = itf.mapInPandas(gram_parts, "g array<double>").collect()
-    yty = np.sum([np.array(r.g) for r in parts], axis=0).reshape(k, k)
-
+    yty = item_gram(model)
     joined = (
         ratings.filter(user_pred)
-        .join(itf.withColumnRenamed("id", "item_id"), "item_id")
+        .join(model.itemFactors.withColumnRenamed("id", "item_id"), "item_id")
         .select("user_id", "strength", "features")
     )
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
         Y = np.stack(pdf["features"].to_numpy()).astype("float64")
         r = pdf["strength"].to_numpy().astype("float64")
-        n_u = len(r)
-        A = yty + (Y.T * (alpha * r)) @ Y + lam * n_u * np.eye(k)
-        b = Y.T @ (1.0 + alpha * r)
-        x = np.linalg.solve(A, b)
+        x = foldin_solve(yty, Y, r)
         return pd.DataFrame(
             {"user_id": [int(pdf["user_id"].iloc[0])], "factor": [x.tolist()]}
         )
@@ -425,9 +443,12 @@ def als_foldin(spark, sf_dir):
     using the Gram trick: the O(#items) term YtY is computed ONCE as a
     rank x rank matrix (distributed partial Grams via mapInPandas, summed on
     the driver — 64 doubles per partition), so each fold-in touches only the
-    items that user interacted with.  Per-user solves run distributed via
-    applyInPandas (an 8x8 system each).  At 100 TB this is the production
-    serve path: nightly full retrain, per-minute fold-in of new users.
+    items that user interacted with.  This batch form solves its users
+    distributed via applyInPandas (an 8x8 system each); the serving layer
+    solves one requesting user on the driver with the same kernel
+    (``foldin_solve``) against a Gram it keeps per model.  At 100 TB this
+    is the production serve path: nightly full retrain, per-minute
+    fold-in of new users.
 
     Quality gate (tests/test_ml_quality.py): folding in a TRAINED user's own
     interactions must reproduce their trained factor (cosine ~ 1)."""

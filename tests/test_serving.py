@@ -3,6 +3,7 @@ answered by RecommendationService, with fold-in instead of retrain-per-write."""
 
 from __future__ import annotations
 
+import pyspark.sql.functions as F
 import pytest
 
 from recommend_spark.serving import MIN_AUDIENCE, RecommendationService
@@ -96,21 +97,125 @@ def test_http_routes_over_socket(service):
         # body's 2-char string keys would otherwise "unpack" into bogus
         # (item, strength) pairs and return 200
         backlog_before = service.pending_foldin_backlog
-        for bad in [{"12": 5}, [[1]], [[1, 2, 3]], "12", 7]:
+        # ids past int32 and non-finite strengths must 400 too: recorded,
+        # they poison the user's fold-in and break save() and retrain()
+        shapes = [{"12": 5}, [[1]], [[1, 2, 3]], "12", 7]
+        wide_ids = [[[2**40, 1.0]], [[-(2**31) - 1, 1.0]]]
+        bodies = [(1, json.dumps(b).encode()) for b in shapes + wide_ids] + [
+            (1, b"[[1, NaN]]"),
+            (1, b"[[1, Infinity]]"),
+            (1, b"[[1, -Infinity]]"),
+            (1, b"[[1, 1e999]]"),
+            (1, b"[[Infinity, 1.0]]"),
+            (2**31, b"[[1, 1.0]]"),
+        ]
+        for user, data in bodies:
             try:
                 urlopen(
-                    Request(
-                        f"{base}/1/ratings",
-                        data=json.dumps(bad).encode(),
-                        method="POST",
-                    )
+                    Request(f"{base}/{user}/ratings", data=data, method="POST")
                 )
-                raise AssertionError(f"expected 400 for body {bad!r}")
+                raise AssertionError(f"expected 400 for body {data!r}")
             except HTTPError as e:
-                assert e.code == 400, (bad, e.code)
+                assert e.code == 400, (user, data, e.code)
         assert service.pending_foldin_backlog == backlog_before
+        w = 2**31
+        for path in (f"/1/ratings/{w}", f"/{w}/ratings/top/3", f"/1/ratings/top/{w}"):
+            try:
+                urlopen(f"{base}{path}")
+                raise AssertionError(f"expected 400 for GET {path}")
+            except HTTPError as e:
+                assert e.code == 400, (path, e.code)
     finally:
         srv.shutdown()
+
+
+def test_foldin_matches_batch_foldin(service):
+    """The driver-side fold-in of one user equals the batch fold-in
+    (applyInPandas over ``_current_ratings()``) for a corpus user with
+    appended rows."""
+    import numpy as np
+
+    from recommend_spark.queries import recommender
+    from recommend_spark.serving import foldin_factors
+
+    service.add_ratings([(5, 1, 4.0), (5, 3, 2.0)])
+    served, seen, _ = foldin_factors(service, 5)
+    (batch,) = recommender.foldin_factors(
+        service.spark,
+        service._current_ratings(),
+        service.model,
+        F.col("user_id") == 5,
+    ).collect()
+    assert np.allclose(served, batch.factor, rtol=0, atol=1e-9)
+    assert {1, 3} <= seen
+
+
+def test_post_only_user_is_served(service):
+    """A user who exists only through POSTs gets a non-empty top-N that is
+    unseen, popular and sorted, and a per-item score for what they rated."""
+    new_user = 1 + service._ratings.agg(F.max("user_id")).first()[0]
+    popular = sorted(r.item_id for r in service._popular.collect())
+    rated = popular[:3]
+    assert service.top_ratings(new_user, 5) == []
+    service.add_ratings([(new_user, i, 3.0) for i in rated])
+    recs = service.top_ratings(new_user, 5)
+    assert 0 < len(recs) <= 5
+    items = [r["item_id"] for r in recs]
+    assert not set(items) & set(rated)
+    assert set(items) <= set(popular)
+    scores = [r["score"] for r in recs]
+    assert scores == sorted(scores, reverse=True)
+    (one,) = service.ratings_for_items(new_user, [items[0]])
+    assert one["score"] == recs[0]["score"]
+
+
+def _next_job(sc) -> int:
+    """First unused job id: ids are sequential per SparkContext, so the
+    jobs a call runs are the ids between two marks."""
+    try:  # the status store is fed asynchronously; drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    except Exception:  # noqa: BLE001 — private hook missing: best effort
+        pass
+    t = sc.statusTracker()
+    i = max(t.getJobIdsForGroup(None), default=-1) + 1
+    while t.getJobInfo(i) is not None:
+        i += 1
+    return i
+
+
+def test_read_job_budget_and_gram_per_model(spark, tmp_path):
+    """With a non-empty append log, a warm top-N read runs at most 4 Spark
+    jobs and a per-item read at most 2 (the fold-in itself runs on the
+    driver).  After retrain() the answers equal those of a service loaded
+    fresh from a save() of the retrained one: the Gram kept for the old
+    model is not reused for the new one."""
+    svc = RecommendationService(spark, SF_DIR)
+    svc.add_ratings([(1, 2, 3.0), (4, 1, 1.0)])
+    sc = spark.sparkContext
+
+    def jobs(read):
+        read()  # first read fills the caches and the Gram
+        first = _next_job(sc)
+        read()
+        return _next_job(sc) - first
+
+    assert jobs(lambda: svc.top_ratings(1, 10)) <= 4
+    assert jobs(lambda: svc.ratings_for_items(1, [2])) <= 2
+
+    svc.add_ratings([(1, 3, 2.0)])
+    svc.retrain()
+    top = svc.top_ratings(1, 5)
+    item = svc.ratings_for_items(1, [top[0]["item_id"], 2])
+    svc.save(str(tmp_path / "model"))
+    fresh = RecommendationService.load(spark, SF_DIR, str(tmp_path / "model"))
+    for a, b in [
+        (top, fresh.top_ratings(1, 5)),
+        (item, fresh.ratings_for_items(1, [top[0]["item_id"], 2])),
+    ]:
+        assert [r["item_id"] for r in a] == [r["item_id"] for r in b]
+        for ra, rb in zip(a, b):
+            assert ra["score"] == pytest.approx(rb["score"], abs=1e-12)
+
 
 def test_retrain_clears_backlog_without_double_count(spark):
     """retrain() must fold the append log into the base EXACTLY once: the
